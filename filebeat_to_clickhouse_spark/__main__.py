@@ -8,7 +8,8 @@ streaming pipeline(s), sink to ClickHouse or parquet.
 Point Filebeat's ``output.elasticsearch.hosts`` at the receiver port,
 exactly as with the reference (README.md:160-170). ``--once`` drains the
 current spool backlog and exits (smoke/batch runs); default runs until
-interrupted with a processing-time trigger.
+interrupted with a processing-time trigger. If any stream fails, the
+others and the receiver are stopped and the exit status is 1.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import argparse
 import os
 import signal
 import sys
+import threading
 
 
 class _ServiceFront:
@@ -39,11 +41,16 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
     """Start receiver (+ enabled input sidecars) + streaming queries;
     returns (front, queries). Reference parity: inputs.redis and
     inputs.logstash (config.yaml:21-24, 35-40) start the RESP and
-    Lumberjack sidecars the reference declares but stubs."""
+    Lumberjack sidecars the reference declares but stubs.
+
+    One stream per wire format (``receiver.FORMATS``, bulk first), plus
+    ``kafka-connector`` in Kafka connector mode, whatever inputs are
+    enabled: the sidecars land NDJSON in ``<spool>/bulk/``, which the bulk
+    stream already reads."""
     from .config import PipelineConfig
     from .session import get_spark
-    from .streaming.pipeline import PARSERS, parse_stream
-    from .streaming.receiver import SpoolReceiver
+    from .streaming.pipeline import parse_stream
+    from .streaming.receiver import FORMATS, SpoolReceiver
     from .streaming.sink import foreach_batch_clickhouse_http, foreach_batch_parquet
     from .streaming.sources import stream_spool_dir
 
@@ -53,7 +60,6 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
 
     sidecars = []
     kafka_rows = None
-    stream_fmts = [f for f in PARSERS if f not in ("redis", "lumberjack", "tcp", "kafka")]
     rcfg = cfg.inputs.get("redis")
     if rcfg is not None and rcfg.enabled:
         from .streaming.redis_source import RedisSpoolSource
@@ -70,7 +76,6 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
                 password=rcfg.options.get("password", ""),
             ).start()
         )
-        stream_fmts.append("redis")
     lcfg = cfg.inputs.get("logstash")
     if lcfg is not None and lcfg.enabled:
         from .streaming.lumberjack import LumberjackSpoolSource
@@ -82,7 +87,6 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
                 port=int(lcfg.options.get("port", 5044)),
             ).start()
         )
-        stream_fmts.append("lumberjack")
     kcfg = cfg.inputs.get("kafka")
     if kcfg is not None and kcfg.enabled:
         # two rungs (C2, config.yaml:27-32): mode="connector" is the
@@ -90,7 +94,7 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
         # inside Structured Streaming (requires spark-sql-kafka on the
         # cluster; fails at plan build with a clear error when absent) —
         # and mode="sidecar" is the dependency-free stdlib wire-protocol
-        # client spooling to the landing dir like the Redis/Lumberjack
+        # client spooling to the bulk landing dir like the Redis/Lumberjack
         # inputs, which is also what the in-repo e2e tests exercise.
         brokers = kcfg.options.get("brokers", ["localhost:9092"])
         topic = kcfg.options.get("topic", "filebeat")
@@ -100,7 +104,6 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
             sidecars.append(
                 KafkaSpoolSource(cfg.spool_dir, bootstrap=brokers[0], topic=topic).start()
             )
-            stream_fmts.append("kafka")
         else:
             from .streaming.sources import stream_kafka
 
@@ -118,7 +121,6 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
                 port=int(tcfg.options.get("port", 9000)),
             ).start()
         )
-        stream_fmts.append("tcp")
 
     # one sink fn PER stream, namespaced by format (sink_id): every query
     # numbers its own epochs from 0, so a shared idempotence namespace
@@ -143,7 +145,7 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
     queries = []
     streams = [
         (fmt, parse_stream(stream_spool_dir(spark, os.path.join(cfg.spool_dir, fmt)), fmt))
-        for fmt in stream_fmts
+        for fmt in FORMATS
     ]
     if kafka_rows is not None:
         streams.append(("kafka-connector", kafka_rows))
@@ -161,6 +163,19 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
             )
         queries.append(writer.start())
     return _ServiceFront(receiver, sidecars), queries
+
+
+def _await_streams(queries, stop: threading.Event):
+    """Block until every query has ended, one has failed, or ``stop`` is
+    set. As with ``spark.streams.awaitAnyTermination``, a failure in any
+    of the streams ends the wait. Returns the failed query, else None."""
+    while True:
+        for q in queries:
+            if not q.isActive and q.exception() is not None:
+                return q
+        if stop.is_set() or not any(q.isActive for q in queries):
+            return None
+        stop.wait(0.5)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -181,23 +196,18 @@ def main(argv: list[str] | None = None) -> int:
         file=sys.stderr,
     )
 
-    stop = {"flag": False}
-    signal.signal(signal.SIGINT, lambda *a: stop.update(flag=True))
-    signal.signal(signal.SIGTERM, lambda *a: stop.update(flag=True))
+    stop = threading.Event()
+    signal.signal(signal.SIGINT, lambda *a: stop.set())
+    signal.signal(signal.SIGTERM, lambda *a: stop.set())
     try:
+        failed = _await_streams(queries, stop)
         for q in queries:
-            if args.once:
-                q.awaitTermination()
-            else:
-                while not stop["flag"] and q.isActive:
-                    q.awaitTermination(1)
-                if stop["flag"]:
-                    break
-        if stop["flag"]:
-            for q in queries:
-                q.stop()
+            q.stop()
     finally:
         receiver.stop()
+    if failed is not None:
+        print(f"stream {failed.id} failed: {failed.exception()}", file=sys.stderr)
+        return 1
     return 0
 
 

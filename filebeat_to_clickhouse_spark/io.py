@@ -151,15 +151,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
     footprint-sizable paths; an UNSIZABLE path (no pyarrow filesystem for
     the URI scheme, unreadable footers) conservatively keeps the rebalance.
 
-    When the rebalance does fire, its width is max(session parallelism,
-    footprint_bytes / maxPartitionBytes): a giant single-row-group file
-    repartitioned only n_par-wide would put N/n_par rows in each task —
-    unbounded as the file grows — which is exactly the task-row bound the
-    fixed-point aggregation kernels (queries._fp_sum_2level) rely on being
-    structural. Scaling the width by bytes restores the same per-task
-    ceiling Spark's own scan splitting enforces (r9 advice). Unsizable
-    paths fall back to n_par width — there the _fp_sum_2level int64-partial
-    bound is NOT structural (its docstring carries the caveat).
+    When the rebalance does fire, its width is
+    ``max(min(n_par, ceil(rows / minTaskRows)), ceil(bytes / maxPartitionBytes), 1)``
+    (``spark.graft.rebalance.minTaskRows``, default 1024;
+    ``spark.sql.files.maxPartitionBytes``): one task per ``minTaskRows``
+    input rows up to the session's parallelism, then wider at
+    maxPartitionBytes strides. The byte term keeps the per-task ceiling
+    Spark's own scan splitting enforces, so a giant single-row-group file
+    cannot put an unbounded row count in one task — the bound the
+    fixed-point aggregation kernels (queries._fp_sum_2level) rely on. A
+    width of 1 skips the exchange. Unsizable paths fall back to n_par
+    width — there the _fp_sum_2level int64-partial bound is NOT structural
+    (its docstring carries the caveat). Both confs are runtime-settable and
+    part of the cache key, so flipping either yields a freshly sized frame.
     """
     from .session import default_parallelism
 
@@ -167,13 +171,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
     # are in place before any plan built here executes.
     configure_session(spark)
     n_par = default_parallelism()
-    # the rebalance-width conf is runtime-toggleable, so it is part of the
-    # plan-cache identity (a stale width would silently survive a conf flip)
+    # the rebalance-width confs are runtime-toggleable, so they are part of
+    # the plan-cache identity (a stale width would silently survive a flip)
     try:
-        _min_task_conf = spark.conf.get("spark.graft.rebalance.minTaskRows", "1024")
-    except Exception:  # noqa: BLE001 - conf service unavailable → default
-        _min_task_conf = "1024"
-    key = (sf_dir, name, rebalance, n_par, _min_task_conf)
+        min_rows = int(spark.conf.get("spark.graft.rebalance.minTaskRows", "1024"))
+    except Exception:  # noqa: BLE001 - unparseable/unavailable conf → default
+        min_rows = 1024
+    try:
+        mpb = _size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    except Exception:  # noqa: BLE001 - unparseable/unavailable conf → default
+        mpb = 128 * 1024**2
+    key = (sf_dir, name, rebalance, n_par, min_rows, mpb)
     per_session = _TABLE_CACHE.setdefault(spark, {})
     cached = per_session.get(key)
     if cached is not None:
@@ -184,12 +192,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
         width = n_par
         fp = parquet_footprint(path)
         if fp is not None:
-            try:
-                mpb = _size_bytes(
-                    spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-                )
-            except Exception:  # noqa: BLE001 - unparseable conf → default
-                mpb = 128 * 1024**2
             # Width is DATA-derived, cores-capped (r10 verdict item 1): ramp
             # one task per `minTaskRows` of input ROWS until the session's
             # parallelism, then keep growing past it at maxPartitionBytes
@@ -215,12 +217,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
             # 32 cores once the sort-writer conf landed (interleaved sweep
             # 0/64/256/1024: 12.03/11.99/11.38/11.52 s over 11 probes).
             # minTaskRows=0 restores the r10 flat-n_par behavior.
-            try:
-                min_rows = int(
-                    spark.conf.get("spark.graft.rebalance.minTaskRows", "1024")
-                )
-            except Exception:  # noqa: BLE001 - unparseable conf → default
-                min_rows = 1024
             ramp = -(-fp[2] // max(min_rows, 1)) if min_rows > 0 else n_par
             width = max(min(n_par, ramp), -(-fp[0] // max(mpb, 1)), 1)
         # width 1 would be a pure-overhead Exchange SinglePartition on top

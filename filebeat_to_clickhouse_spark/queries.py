@@ -4545,27 +4545,7 @@ def bucketed_fact_join_topk(spark, sf_dir):
     the bar either way. The pin stays. Do not re-litigate the hint
     without removing the layout.
     """
-    import hashlib
-
-    from .storage import auto_bucket_count, write_bucketed_table
-
-    nb = auto_bucket_count(
-        os.path.join(sf_dir, "lineitem.parquet"), os.path.join(sf_dir, "orders.parquet")
-    )
-    tag = hashlib.md5(f"{sf_dir}|{nb}".encode()).hexdigest()[:8]
-    ot, lt = f"fbck_orders_bko_{tag}", f"fbck_lineitem_bko_{tag}"
-    if not spark.catalog.tableExists(ot):
-        write_bucketed_table(
-            load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
-            ot, "o_orderkey", nb, sort_col="o_orderkey",
-        )
-    if not spark.catalog.tableExists(lt):
-        write_bucketed_table(
-            load_table(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            ),
-            lt, "l_orderkey", nb, sort_col="l_orderkey",
-        )
+    ot, lt = _bucketed_layout(spark, sf_dir, _TOPK_FACTS)
     per_order = (
         spark.table(ot)
         .hint("merge")
@@ -4583,40 +4563,52 @@ def bucketed_fact_join_topk(spark, sf_dir):
     return per_order.orderBy(F.desc("revenue"), "o_orderkey").limit(10)
 
 
-def _bucketed_order_facts(spark, sf_dir):
-    """Shared orderkey-bucketed layout for the q5/q10 bucketed variants
-    (r11, r10 verdict item 6): orders and lineitem persisted bucketed AND
-    sorted on the order key with the column sets those queries probe, so
-    their fact-fact join runs with ZERO exchanges on either side (guide
-    §3.3 "bucketed tables persist a partitioning across jobs", §6 layout).
-    Same build-once-per-(session, sf_dir) posture and md5-tagged naming as
-    bucketed_fact_join_topk — the catalog is in-memory, so a fresh JVM
-    rebuilds (and overwrites) the layout; nothing precomputed survives into
-    another benchmark process. Returns (orders_table, lineitem_table)."""
+def _bucketed_layout(spark, sf_dir, layout):
+    """Persist each ``(table, key, columns)`` of ``layout`` bucketed AND
+    sorted on ``key`` with one shared ``storage.auto_bucket_count`` (all
+    sides must share it to co-locate); returns the catalog table names in
+    layout order. Built once per (session, sf_dir, layout) under
+    md5-tagged names and reused — the catalog is in-memory, so a fresh
+    JVM rebuilds (and overwrites) the layout; nothing precomputed survives
+    into another benchmark process. The tag hashes sf_dir, the bucket
+    count AND the whole layout (projected columns, sort keys), so editing
+    a layout builds fresh tables instead of serving stale ones."""
     import hashlib
 
     from .storage import auto_bucket_count, write_bucketed_table
 
-    nb = auto_bucket_count(
-        os.path.join(sf_dir, "lineitem.parquet"), os.path.join(sf_dir, "orders.parquet")
-    )
-    tag = hashlib.md5(f"{sf_dir}|{nb}|ofacts".encode()).hexdigest()[:8]
-    ot, lt = f"fbck_orders_ofc_{tag}", f"fbck_lineitem_ofc_{tag}"
-    if not spark.catalog.tableExists(ot):
-        write_bucketed_table(
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey", "o_orderdate"
-            ),
-            ot, "o_orderkey", nb, sort_col="o_orderkey",
-        )
-    if not spark.catalog.tableExists(lt):
-        write_bucketed_table(
-            load_table(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_suppkey", "l_returnflag", "l_extendedprice", "l_discount"
-            ),
-            lt, "l_orderkey", nb, sort_col="l_orderkey",
-        )
-    return ot, lt
+    nb = auto_bucket_count(*(os.path.join(sf_dir, f"{t}.parquet") for t, _k, _c in layout))
+    tag = hashlib.md5(repr((sf_dir, nb, layout)).encode()).hexdigest()[:8]
+    names = []
+    for table, key, cols in layout:
+        name = f"fbck_{table}_{tag}"
+        if not spark.catalog.tableExists(name):
+            write_bucketed_table(
+                load_table(spark, sf_dir, table).select(*cols), name, key, nb, sort_col=key
+            )
+        names.append(name)
+    return names
+
+
+#: bucketed_fact_join_topk's layout: the columns its per-order top-k reads.
+_TOPK_FACTS = (
+    ("orders", "o_orderkey", ("o_orderkey", "o_orderpriority")),
+    ("lineitem", "l_orderkey", ("l_orderkey", "l_extendedprice", "l_discount")),
+)
+
+#: Shared orderkey-bucketed layout for the q5/q10 bucketed variants (r11,
+#: r10 verdict item 6): orders and lineitem with the column sets those
+#: queries probe, so their fact-fact join runs with ZERO exchanges on
+#: either side (guide §3.3 "bucketed tables persist a partitioning across
+#: jobs", §6 layout).
+_ORDER_FACTS = (
+    ("orders", "o_orderkey", ("o_orderkey", "o_custkey", "o_orderdate")),
+    (
+        "lineitem",
+        "l_orderkey",
+        ("l_orderkey", "l_suppkey", "l_returnflag", "l_extendedprice", "l_discount"),
+    ),
+)
 
 
 @register(
@@ -4633,7 +4625,7 @@ def q5_local_supplier_volume_bucketed(spark, sf_dir):
     each a prefix of the intended plan; the SMJ→SHJ conversion was
     rejected on measured OOM (session.py), so the remaining lever is the
     LAYOUT: with both facts bucketed and sorted on the order key
-    (_bucketed_order_facts), the orders⋈lineitem join needs no exchange
+    (_ORDER_FACTS), the orders⋈lineitem join needs no exchange
     and no sort on either side — ``hint("merge")`` pins the SMJ the
     bucketing serves (AQE would broadcast at test scale and hide the
     eliminated exchange, the bucketed_fact_join_topk precedent). The dim
@@ -4642,7 +4634,7 @@ def q5_local_supplier_volume_bucketed(spark, sf_dir):
     query fleet at 100 TB — the production answer for a repeatedly-joined
     fact pair; the plain q5 stays the of-record scan-from-parquet entry."""
     t = {n: load_table(spark, sf_dir, n) for n in ("customer", "supplier", "nation", "region")}
-    ot, lt = _bucketed_order_facts(spark, sf_dir)
+    ot, lt = _bucketed_layout(spark, sf_dir, _ORDER_FACTS)
     orders = spark.table(ot).filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
@@ -4682,7 +4674,7 @@ def q10_returned_items_bucketed(spark, sf_dir):
     identical oracle: the layout must be result-invisible."""
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
-    ot, lt = _bucketed_order_facts(spark, sf_dir)
+    ot, lt = _bucketed_layout(spark, sf_dir, _ORDER_FACTS)
     orders = spark.table(ot).filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1997-04-01 00:00:00").cast("timestamp_ntz"))

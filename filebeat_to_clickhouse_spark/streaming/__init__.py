@@ -7,7 +7,7 @@ The reference is a streaming ETL (HTTP push → normalize → ClickHouse,
 the batch parse/normalize transforms verbatim.
 """
 
-from .sources import stream_spool_dir, stream_socket, stream_kafka
+from .sources import stream_spool_dir, stream_kafka
 from .receiver import SpoolReceiver
 from .sink import (
     foreach_batch_parquet,
@@ -36,7 +36,6 @@ from .sessions import sessionize_stream
 
 __all__ = [
     "stream_spool_dir",
-    "stream_socket",
     "stream_kafka",
     "SpoolReceiver",
     "foreach_batch_parquet",

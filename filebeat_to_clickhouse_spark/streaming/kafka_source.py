@@ -1,6 +1,6 @@
 """Kafka consumer sidecar (C2, config.yaml:27-32) — a stdlib-only client
-for the legacy Kafka wire protocol that drains a topic into the spool
-landing dir, where the ordinary file stream + wire parsers take over
+for the legacy Kafka wire protocol that drains a topic into the spool's
+``bulk/`` landing dir, where the ordinary bulk file stream takes over
 (the same sidecar pattern as the Redis and Lumberjack sources: the
 ~200 lines that talk the broker protocol stay OUTSIDE Spark and the
 Spark side remains an idiomatic file stream).
@@ -44,8 +44,9 @@ import os
 import socket
 import struct
 import threading
-import time
 import zlib
+
+from .receiver import spool_body
 
 API_FETCH, API_LIST_OFFSETS, API_METADATA = 1, 2, 3
 EARLIEST, LATEST = -2, -1
@@ -147,12 +148,12 @@ def _parse_message_set(buf: bytes) -> tuple[list[tuple[int, bytes]], int]:
 
 
 class KafkaSpoolSource:
-    """Drain a Kafka topic into ``spool_dir/kafka/`` as NDJSON bodies.
+    """Drain a Kafka topic into ``spool_dir/bulk/`` as NDJSON bodies.
 
-    Bodies land via the same atomic ``.part`` → rename protocol as the
-    HTTP receiver, so the file stream never observes partial writes and
-    ``stream_spool_dir(spark, spool, fmt="kafka")`` + the NDJSON parsers
-    consume them unchanged.
+    Bodies land through the HTTP receiver's ``spool_body``, so the file
+    stream never observes partial writes and the bulk stream
+    (``stream_spool_dir(spark, os.path.join(spool, "bulk"))``) parses them
+    with the bulk parser's bare-document tolerance.
     """
 
     def __init__(
@@ -175,9 +176,8 @@ class KafkaSpoolSource:
         # partition is quarantined (no refetch ladder, no reconnect storm)
         # while every OTHER partition keeps draining; visible to callers
         self.poisoned: dict[int, int] = {}
-        os.makedirs(os.path.join(spool_dir, "kafka"), exist_ok=True)
+        os.makedirs(os.path.join(spool_dir, "bulk"), exist_ok=True)
         self._offsets_path = os.path.join(spool_dir, "kafka.offsets")
-        self._seq = itertools.count()
         self._corr = itertools.count(1)
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -350,7 +350,7 @@ class KafkaSpoolSource:
                                     drained += 1  # retry immediately, not idle
                             continue
                         fetch_bytes[part] = self.max_bytes
-                        self._spool(b"\n".join(v for _, v in msgs))
+                        spool_body(self.spool_dir, "bulk", b"\n".join(v for _, v in msgs))
                         offsets[part] = max(o for o, _ in msgs) + 1
                         self._save_offsets(offsets)
                         drained += len(msgs)
@@ -369,15 +369,6 @@ class KafkaSpoolSource:
                         s.close()
                     except OSError:
                         pass
-
-    def _spool(self, body: bytes) -> str:
-        name = f"{time.time_ns()}-{next(self._seq)}"
-        tmp = os.path.join(self.spool_dir, "kafka", f".{name}.part")
-        final = os.path.join(self.spool_dir, "kafka", f"{name}.body")
-        with open(tmp, "wb") as out:
-            out.write(body)
-        os.rename(tmp, final)
-        return final
 
     # -- lifecycle ---------------------------------------------------------
     def start(self) -> "KafkaSpoolSource":

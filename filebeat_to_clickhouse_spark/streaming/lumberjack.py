@@ -20,21 +20,23 @@ object), spools each ack window as one body via the atomic ``.part`` →
 rename protocol, and acks the highest sequence — at-least-once into the
 spool (Beats resends unacked windows; replays dedup downstream via
 ``streaming_dedup``/the idempotent sinks), exactly-once from the spool
-file onward. The Spark side stays an ordinary file stream
-(``stream_spool_dir(spark, spool, fmt="lumberjack")`` + wire parsers).
+file onward. Bodies land in ``<spool>/bulk/`` through the HTTP receiver's
+``spool_body``, so the Spark side is the ordinary bulk file stream
+(``stream_spool_dir(spark, os.path.join(spool, "bulk"))``), whose parser
+reads bare NDJSON events unchanged.
 """
 
 from __future__ import annotations
 
 import io
-import itertools
 import json
 import os
 import socketserver
 import struct
 import threading
-import time
 import zlib
+
+from .receiver import spool_body
 
 
 def _read_exact(f, n: int) -> bytes:
@@ -85,13 +87,11 @@ def decode_frames(f):
 
 class LumberjackSpoolSource:
     """Threaded Lumberjack v2 TCP server spooling event batches under
-    ``spool_dir/lumberjack/``."""
+    ``spool_dir/bulk/``."""
 
     def __init__(self, spool_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.spool_dir = spool_dir
-        os.makedirs(os.path.join(spool_dir, "lumberjack"), exist_ok=True)
-        self._seq = itertools.count()
-        source = self
+        os.makedirs(os.path.join(spool_dir, "bulk"), exist_ok=True)
 
         class Handler(socketserver.StreamRequestHandler):
             def handle(self):
@@ -112,14 +112,14 @@ class LumberjackSpoolSource:
                         )
                         pending.append(line)
                         if window and len(pending) >= window:
-                            source._spool(b"\n".join(pending))
+                            spool_body(spool_dir, "bulk", b"\n".join(pending))
                             pending = []
                             self.wfile.write(b"2A" + struct.pack(">I", max_seq))
                 except (EOFError, ValueError, zlib.error):
                     pass
                 finally:
                     if pending:
-                        source._spool(b"\n".join(pending))
+                        spool_body(spool_dir, "bulk", b"\n".join(pending))
                         try:
                             self.wfile.write(b"2A" + struct.pack(">I", max_seq))
                         except OSError:
@@ -132,15 +132,6 @@ class LumberjackSpoolSource:
         self._server = Server((host, port), Handler)
         self.port = self._server.server_address[1]
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def _spool(self, body: bytes) -> str:
-        name = f"{time.time_ns()}-{next(self._seq)}"
-        tmp = os.path.join(self.spool_dir, "lumberjack", f".{name}.part")
-        final = os.path.join(self.spool_dir, "lumberjack", f"{name}.body")
-        with open(tmp, "wb") as out:
-            out.write(body)
-        os.rename(tmp, final)
-        return final
 
     def start(self) -> "LumberjackSpoolSource":
         self._thread.start()
@@ -165,8 +156,9 @@ class TcpLinesSpoolSource:
     replays nothing, loses nothing from the spool file onward.
 
     Each connection's complete lines are spooled in chunks as NDJSON
-    bodies (a trailing line without newline flushes on disconnect); the
-    bulk parser's bare-document tolerance consumes them unchanged.
+    bodies under ``spool_dir/bulk/`` (a trailing line without newline
+    flushes on disconnect); the bulk parser's bare-document tolerance
+    consumes them unchanged.
     """
 
     def __init__(
@@ -177,9 +169,7 @@ class TcpLinesSpoolSource:
         flush_lines: int = 256,
     ):
         self.spool_dir = spool_dir
-        os.makedirs(os.path.join(spool_dir, "tcp"), exist_ok=True)
-        self._seq = itertools.count()
-        source = self
+        os.makedirs(os.path.join(spool_dir, "bulk"), exist_ok=True)
 
         class Handler(socketserver.StreamRequestHandler):
             def handle(self):
@@ -190,11 +180,11 @@ class TcpLinesSpoolSource:
                         if line:
                             pending.append(line)
                         if len(pending) >= flush_lines:
-                            source._spool_tcp(b"\n".join(pending))
+                            spool_body(spool_dir, "bulk", b"\n".join(pending))
                             pending = []
                 finally:
                     if pending:
-                        source._spool_tcp(b"\n".join(pending))
+                        spool_body(spool_dir, "bulk", b"\n".join(pending))
 
         class Server(socketserver.ThreadingTCPServer):
             daemon_threads = True
@@ -203,15 +193,6 @@ class TcpLinesSpoolSource:
         self._server = Server((host, port), Handler)
         self.port = self._server.server_address[1]
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def _spool_tcp(self, body: bytes) -> str:
-        name = f"{time.time_ns()}-{next(self._seq)}"
-        tmp = os.path.join(self.spool_dir, "tcp", f".{name}.part")
-        final = os.path.join(self.spool_dir, "tcp", f"{name}.body")
-        with open(tmp, "wb") as out:
-            out.write(body)
-        os.rename(tmp, final)
-        return final
 
     def start(self) -> "TcpLinesSpoolSource":
         self._thread.start()

@@ -38,13 +38,6 @@ PARSERS = {
     "logstash": parse_logstash,
     "events": parse_json_array,
     "single": parse_single,
-    # TCP/Redis/Kafka sidecar spools (redis_source.py, lumberjack.py,
-    # kafka_source.py): NDJSON of bare events — the bulk parser's
-    # bare-document tolerance fits exactly
-    "redis": parse_bulk_ndjson,
-    "lumberjack": parse_bulk_ndjson,
-    "tcp": parse_bulk_ndjson,
-    "kafka": parse_bulk_ndjson,
 }
 
 
@@ -53,11 +46,11 @@ def parse_stream(values: DataFrame, fmt: str) -> DataFrame:
     return normalize_events(PARSERS[fmt](values), raw_col="raw_json")
 
 
-def spooled_log_stream(spark: SparkSession, spool_dir: str, fmt: str = "bulk", **source_opts) -> DataFrame:
+def spooled_log_stream(spark: SparkSession, spool_dir: str, fmt: str = "bulk") -> DataFrame:
     """Tail ``spool_dir/<fmt>`` (as laid out by SpoolReceiver) → log rows."""
     import os
 
-    return parse_stream(stream_spool_dir(spark, os.path.join(spool_dir, fmt), **source_opts), fmt)
+    return parse_stream(stream_spool_dir(spark, os.path.join(spool_dir, fmt)), fmt)
 
 
 def log_rate_per_window(

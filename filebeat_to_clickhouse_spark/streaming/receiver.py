@@ -14,8 +14,10 @@ reference router (main.go:158-176):
 | POST /filebeat, /ingest | single JSON | handleFilebeat (main.go:365) |
 | GET /health, / | health JSON | healthCheck (main.go:246) |
 
-Bodies land as ``<spool>/<fmt>/<ts>-<seq>.body`` via atomic rename, so the
-file stream never observes partial writes. The bulk ack is ES-CONFORMANT:
+Bodies land as ``<spool>/<fmt>/<ts>-<seq>.body`` via ``spool_body``'s
+atomic rename, so the file stream never observes partial writes; the
+input sidecars (Redis, Lumberjack, TCP lines, Kafka) land their NDJSON
+bodies in ``<spool>/bulk/`` through it too. The bulk ack is ES-CONFORMANT:
 ``took``/``errors`` plus a real per-action ``items`` ARRAY
 (``{"<verb>": {"status": ..., "_id": ...}}`` per action line, 201 for
 index/create, 200 for update/delete) — the reference replies ``items``
@@ -36,6 +38,26 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 FORMATS = ("bulk", "logstash", "events", "single")
 
 _ACTION_VERBS = ("index", "create", "update", "delete")
+
+# One counter for the whole process: the receiver and every sidecar write
+# into the same directories, and two writers drawing equal sequence numbers
+# in the same nanosecond would otherwise name two bodies alike (os.rename
+# then silently replaces one with the other).
+_SEQ = itertools.count()
+
+
+def spool_body(spool_dir: str, fmt: str, body: bytes) -> str:
+    """Land ``body`` as ``<spool_dir>/<fmt>/<time_ns>-<seq>.body``: written
+    to a dot-prefixed ``.part`` file first (hidden from the file stream),
+    then renamed into place, so a reader sees the whole body or nothing.
+    Returns the final path."""
+    name = f"{time.time_ns()}-{next(_SEQ)}"
+    tmp = os.path.join(spool_dir, fmt, f".{name}.part")
+    final = os.path.join(spool_dir, fmt, f"{name}.body")
+    with open(tmp, "wb") as f:
+        f.write(body)
+    os.rename(tmp, final)
+    return final
 
 
 def bulk_ack(body: bytes) -> dict:
@@ -92,7 +114,6 @@ class SpoolReceiver:
         self.spool_dir = spool_dir
         for fmt in FORMATS:
             os.makedirs(os.path.join(spool_dir, fmt), exist_ok=True)
-        self._seq = itertools.count()
         receiver = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -142,7 +163,7 @@ class SpoolReceiver:
                     self._reply(400, {"error": "invalid Content-Length"})
                     return
                 try:
-                    receiver._spool(fmt, body)
+                    spool_body(receiver.spool_dir, fmt, body)
                 except OSError as e:
                     self._reply(500, {"error": f"spool failure: {e}"})
                     return
@@ -154,15 +175,6 @@ class SpoolReceiver:
         self._server = ThreadingHTTPServer((host, port), Handler)
         self.port = self._server.server_address[1]
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def _spool(self, fmt: str, body: bytes) -> str:
-        name = f"{time.time_ns()}-{next(self._seq)}"
-        tmp = os.path.join(self.spool_dir, fmt, f".{name}.part")
-        final = os.path.join(self.spool_dir, fmt, f"{name}.body")
-        with open(tmp, "wb") as f:
-            f.write(body)
-        os.rename(tmp, final)
-        return final
 
     def start(self) -> "SpoolReceiver":
         self._thread.start()

@@ -1,9 +1,10 @@
 """Redis LIST / PUBSUB source sidecar (C3, config.yaml:35-40) — a
 stdlib-only RESP client that drains the Filebeat redis output's data
-structure into the spool landing dir, where the ordinary file stream +
-wire parsers take over (the same sidecar pattern as the HTTP receiver:
-Spark has no Redis streaming source, so the ~100 lines that talk RESP
-stay OUTSIDE Spark and the Spark side remains an idiomatic file stream).
+structure into the spool's ``bulk/`` landing dir, where the ordinary bulk
+file stream + NDJSON parser take over (the same sidecar pattern as the
+HTTP receiver: Spark has no Redis streaming source, so the ~100 lines
+that talk RESP stay OUTSIDE Spark and the Spark side remains an
+idiomatic file stream).
 
 The reference declares this input and stubs the body with a TODO
 (main.go:632-641, "needs the go-redis library"); the protocol is simple
@@ -26,11 +27,11 @@ spool file onward. A production hardening is LMOVE to a processing list
 
 from __future__ import annotations
 
-import itertools
 import os
 import socket
 import threading
-import time
+
+from .receiver import spool_body
 
 
 class RespError(RuntimeError):
@@ -114,12 +115,12 @@ class _SockReader:
 
 
 class RedisSpoolSource:
-    """Drain a Redis LIST or PUBSUB channel into ``spool_dir/redis/``.
+    """Drain a Redis LIST or PUBSUB channel into ``spool_dir/bulk/``.
 
-    Bodies land via the same atomic ``.part`` → rename protocol as the
-    HTTP receiver, so the file stream never observes partial writes and
-    ``stream_spool_dir(spark, spool, fmt="redis")`` + the NDJSON parsers
-    consume them unchanged.
+    Bodies land through the HTTP receiver's ``spool_body``, so the file
+    stream never observes partial writes and the bulk stream
+    (``stream_spool_dir(spark, os.path.join(spool, "bulk"))``) parses them
+    with the bulk parser's bare-document tolerance.
     """
 
     def __init__(
@@ -141,8 +142,7 @@ class RedisSpoolSource:
         self.password, self.batch_size, self.poll_interval = password, batch_size, poll_interval
         self.socket_timeout = socket_timeout
         self.last_error: Exception | None = None  # latest drain-loop failure
-        os.makedirs(os.path.join(spool_dir, "redis"), exist_ok=True)
-        self._seq = itertools.count()
+        os.makedirs(os.path.join(spool_dir, "bulk"), exist_ok=True)
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
         self._lpop_count_ok = True  # downgraded on first LPOP COUNT error
@@ -176,7 +176,7 @@ class RedisSpoolSource:
                     break
                 items.append(item)
         if items:
-            self._spool(b"\n".join(items))
+            spool_body(self.spool_dir, "bulk", b"\n".join(items))
         return len(items)
 
     def _run(self) -> None:
@@ -210,7 +210,7 @@ class RedisSpoolSource:
                         msg = _read_reply(rd)
                         backoff = self.poll_interval
                         if isinstance(msg, list) and len(msg) == 3 and msg[0] == b"message":
-                            self._spool(msg[2])
+                            spool_body(self.spool_dir, "bulk", msg[2])
                     return
                 while not self._stop.is_set():
                     if self._drain_list_once(sock, f) == 0:
@@ -228,15 +228,6 @@ class RedisSpoolSource:
                         sock.close()
                     except OSError:
                         pass
-
-    def _spool(self, body: bytes) -> str:
-        name = f"{time.time_ns()}-{next(self._seq)}"
-        tmp = os.path.join(self.spool_dir, "redis", f".{name}.part")
-        final = os.path.join(self.spool_dir, "redis", f"{name}.body")
-        with open(tmp, "wb") as out:
-            out.write(body)
-        os.rename(tmp, final)
-        return final
 
     # -- lifecycle ----------------------------------------------------------
     def start(self) -> "RedisSpoolSource":

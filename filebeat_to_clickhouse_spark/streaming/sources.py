@@ -3,12 +3,13 @@ batch wire-format parsers (ingest.formats) consume unchanged.
 
 | Source | Reference analog |
 |---|---|
-| spool dir (file stream) | HTTP push bodies landed by the receiver sidecar (A1/A3); file-tail input stub (C4, config.yaml:43-46) |
-| socket | TCP JSON-lines server stub (C5, config.yaml:49-52) |
+| spool dir (file stream) | HTTP push bodies landed by the receiver sidecar (A1/A3) and NDJSON landed by the Redis/Lumberjack/TCP/Kafka sidecars; file-tail input stub (C4, config.yaml:43-46) |
 | kafka | Kafka consumer stub (C2, config.yaml:27-32) |
 
-The reference declares C2/C4/C5 as TODO bodies (main.go:612-665); in Spark
-all three are built-in sources, so "framework prepared" becomes "works".
+The reference declares C2/C4 as TODO bodies (main.go:612-665); in Spark
+both are built-in sources, so "framework prepared" becomes "works". The
+TCP JSON-lines input (C5) is ``lumberjack.TcpLinesSpoolSource``, which
+spools lines so they replay like every other body.
 """
 
 from __future__ import annotations
@@ -17,39 +18,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
-def stream_spool_dir(
-    spark: SparkSession,
-    path: str,
-    whole_body: bool = True,
-    max_files_per_trigger: int | None = None,
-    clean_source: str | None = None,
-) -> DataFrame:
-    """Tail a landing directory of spooled HTTP request bodies.
+def stream_spool_dir(spark: SparkSession, path: str, whole_body: bool = True) -> DataFrame:
+    """Tail a landing directory of spooled request bodies.
 
     ``whole_body=True`` reads one row per file (one HTTP request body —
     the reference's batch unit, main.go:332) via the text source's
     ``wholetext``; ``False`` reads line-by-line, which is equivalent for
     NDJSON formats and preferable when bodies are concatenated into large
-    spool segments. ``clean_source`` ('archive'|'delete') bounds the landing
-    dir's growth in production.
+    spool segments.
     """
-    reader = spark.readStream.format("text").option("wholetext", str(whole_body).lower())
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if clean_source:
-        reader = reader.option("cleanSource", clean_source)
-    return reader.load(path)
-
-
-def stream_socket(spark: SparkSession, host: str = "localhost", port: int = 9999) -> DataFrame:
-    """TCP JSON-lines source (C5). Test-quality (no replay), like the
-    reference's stub intent."""
-    return (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", str(port))
-        .load()
-    )
+    return spark.readStream.format("text").option("wholetext", str(whole_body).lower()).load(path)
 
 
 #: The record schema the Spark Kafka source emits — the contract

@@ -33,3 +33,33 @@ class TestScanSplitsWide:
 
     def test_unreadable_path_keeps_rebalance(self, tmp_path):
         assert not _scan_splits_wide(str(tmp_path / "missing.parquet"), 2)
+
+
+class TestLoadTableCacheKey:
+    def test_max_partition_bytes_flip_resizes_rebalance(self, spark, tmp_path):
+        """The rebalance width depends on spark.sql.files.maxPartitionBytes
+        (its byte term), so the cached frame must not survive a flip of
+        that conf: the second load must come back at the new width."""
+        import re
+
+        from filebeat_to_clickhouse_spark.io import load_table
+
+        rows = 2048  # two minTaskRows (1024) ramp tasks at the default conf
+        pq.write_table(
+            pa.table({"x": pa.array(range(rows), type=pa.int64())}),
+            str(tmp_path / "t.parquet"),
+        )
+        size = os.path.getsize(tmp_path / "t.parquet")
+
+        def width(df):
+            plan = df._jdf.queryExecution().logical().toString()
+            return int(re.search(r"Repartition (\d+), true", plan).group(1))
+
+        key = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(key)
+        try:
+            assert width(load_table(spark, str(tmp_path), "t", rebalance=True)) == 2
+            spark.conf.set(key, str(size // 5 + 1))  # byte term: 5 tasks
+            assert width(load_table(spark, str(tmp_path), "t", rebalance=True)) == 5
+        finally:
+            spark.conf.set(key, old)

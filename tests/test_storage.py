@@ -605,3 +605,26 @@ class TestCompactSummingConcurrency:
             spark.read.parquet(path).filter("k = 'late'").select("hits").collect()
         )
         assert late["hits"] == 21
+
+
+class TestBucketedLayoutTag:
+    def test_layout_change_builds_fresh_table(self, spark):
+        """queries._bucketed_layout names its tables by a tag over sf_dir,
+        bucket count AND the layout itself: projecting another column set
+        must build a new table, not reuse the old one under its name."""
+        from conftest import SF_SMOKE
+
+        from filebeat_to_clickhouse_spark.queries import _bucketed_layout
+
+        a = (("orders", "o_orderkey", ("o_orderkey", "o_custkey")),)
+        b = (("orders", "o_orderkey", ("o_orderkey", "o_orderdate")),)
+        c = (("orders", "o_custkey", ("o_orderkey", "o_custkey")),)  # sort key differs
+        names = [_bucketed_layout(spark, SF_SMOKE, lay)[0] for lay in (a, b, c)]
+        try:
+            assert len(set(names)) == 3
+            assert spark.table(names[0]).columns == ["o_orderkey", "o_custkey"]
+            assert spark.table(names[1]).columns == ["o_orderkey", "o_orderdate"]
+            assert _bucketed_layout(spark, SF_SMOKE, a) == [names[0]]  # reused
+        finally:
+            for n in names:
+                spark.sql(f"DROP TABLE IF EXISTS {n}")

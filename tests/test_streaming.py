@@ -1133,7 +1133,7 @@ class TestRedisSpoolSource:
         deadline = _time.time() + 10
         want = b"\n".join(self.ITEMS).decode().count("message")
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "redis", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= want:
                 break
@@ -1181,7 +1181,7 @@ class TestRedisSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "redis", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if '"r1"' in text:
                 break
@@ -1191,7 +1191,7 @@ class TestRedisSpoolSource:
         _time.sleep(0.3)
         second = _FakeRedis([b'{"message":"r2"}'], port=port)  # reborn
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "redis", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if '"r2"' in text:
                 break
@@ -1249,7 +1249,7 @@ class TestRedisSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "redis", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if '"p2"' in text:
                 break
@@ -1301,7 +1301,7 @@ class TestLumberjackSource:
 
             deadline = _time.time() + 5
             while _time.time() < deadline:
-                bodies = glob.glob(os.path.join(spool, "lumberjack", "*.body"))
+                bodies = glob.glob(os.path.join(spool, "bulk", "*.body"))
                 if bodies:
                     break
                 _time.sleep(0.05)
@@ -1330,7 +1330,7 @@ class TestLumberjackSource:
             deadline = _time.time() + 5
             bodies = []
             while _time.time() < deadline and not bodies:
-                bodies = glob.glob(os.path.join(spool, "lumberjack", "*.body"))
+                bodies = glob.glob(os.path.join(spool, "bulk", "*.body"))
                 _time.sleep(0.05)
         assert bodies and "tail" in open(bodies[0]).read()
 
@@ -1473,7 +1473,7 @@ class TestKafkaSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= want:
                 break
@@ -1526,7 +1526,7 @@ class TestKafkaSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count('"message"') >= 3:
                 break
@@ -1562,7 +1562,7 @@ class TestKafkaSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= 3:
                 break
@@ -1599,7 +1599,7 @@ class TestKafkaSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= 3 and src.poisoned:
                 break
@@ -1667,7 +1667,7 @@ class TestKafkaSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= 3:
                 break
@@ -1707,7 +1707,7 @@ class TestKafkaSpoolSource:
         broker.partitions[0].extend(self.VALUES)
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= 3:
                 break
@@ -1740,7 +1740,7 @@ class TestKafkaSpoolSource:
         try:
             deadline = _time.time() + 10
             while _time.time() < deadline:
-                if glob.glob(os.path.join(cfg.spool_dir, "kafka", "*.body")):
+                if glob.glob(os.path.join(cfg.spool_dir, "bulk", "*.body")):
                     break
                 _time.sleep(0.05)
             for q in queries:
@@ -1872,6 +1872,70 @@ class TestCliMain:
         msgs = {r["message"] for r in spark.read.parquet(out).collect()}
         assert "cli-e2e" in msgs
 
+    def test_failure_of_a_later_stream_stops_the_service(self, spark, tmp_path, monkeypatch):
+        """A stream that is not first in the list fails while the first one
+        stays active (processing-time trigger, idle bulk spool): main must
+        notice, stop the other streams and the receiver, and return
+        non-zero — not keep waiting on stream #1. A watchdog SIGINT after
+        60 s turns a wait that never notices the failure into a test
+        failure instead of a hang."""
+        import signal
+        import socket as _socket
+        import threading
+        import time as _time
+
+        import yaml as _yaml
+
+        from filebeat_to_clickhouse_spark.__main__ import main
+        from filebeat_to_clickhouse_spark.streaming import sink as sink_mod
+
+        real_sink = sink_mod.foreach_batch_parquet
+
+        def failing_logstash_sink(path, **kw):
+            if kw.get("sink_id") != "logstash":
+                return real_sink(path, **kw)
+
+            def fail(batch, epoch_id):
+                raise RuntimeError("logstash sink down")
+
+            return fail
+
+        monkeypatch.setattr(sink_mod, "foreach_batch_parquet", failing_logstash_sink)
+        spool = tmp_path / "spool"
+        (spool / "logstash").mkdir(parents=True)
+        (spool / "logstash" / "1.body").write_text('{"message":"to the failing sink"}')
+        s = _socket.socket()
+        s.bind(("127.0.0.1", 0))
+        port = s.getsockname()[1]
+        s.close()
+        cfgp = tmp_path / "config.yaml"
+        cfgp.write_text(
+            _yaml.safe_dump(
+                {
+                    "server": {"host": "127.0.0.1", "port": port},
+                    "spark": {
+                        "spool_dir": str(spool),
+                        "checkpoint_dir": str(tmp_path / "ck"),
+                        "trigger_seconds": 1,
+                    },
+                }
+            )
+        )
+        before = {q.id for q in spark.streams.active}
+        watchdog = threading.Timer(60, os.kill, (os.getpid(), signal.SIGINT))
+        watchdog.start()
+        t0 = _time.monotonic()
+        try:
+            rc = main(["--config", str(cfgp), "--sink", "parquet", "--out",
+                       str(tmp_path / "logs_table")])
+        finally:
+            watchdog.cancel()
+        assert _time.monotonic() - t0 < 60, "main kept waiting on the first stream"
+        assert rc != 0
+        assert {q.id for q in spark.streams.active} <= before  # the others stopped
+        with _socket.socket() as s:  # and the receiver released its port
+            s.bind(("127.0.0.1", port))
+
 
 class TestGrowthWatchdog:
     def test_timeout_cancels_and_sweeps_leaked_streams(self, spark):
@@ -1908,9 +1972,11 @@ class TestGrowthWatchdog:
 
 class TestServiceWithSidecars:
     def test_redis_and_lumberjack_inputs_flow_to_sink(self, spark, tmp_path):
-        """Full reference config-surface parity: inputs.redis and
-        inputs.logstash enabled → sidecars drain into the spool → the same
-        per-format streams land everything in the sink."""
+        """Full reference config-surface parity: inputs.redis,
+        inputs.logstash, inputs.tcp and inputs.kafka (sidecar mode)
+        enabled → every sidecar lands NDJSON in the bulk spool dir → the
+        four wire-format streams (no per-input stream) land everything in
+        the sink."""
         import struct as _s
         import socket as _socket
         import time as _time
@@ -1919,6 +1985,7 @@ class TestServiceWithSidecars:
         from filebeat_to_clickhouse_spark.config import InputConfig, PipelineConfig
 
         redis_srv = _FakeRedis([b'{"message":"via-redis"}'])
+        broker = _FakeKafkaBroker({0: [b'{"message":"via-kafka"}']})
         cfg = PipelineConfig()
         cfg.server.host, cfg.server.port = "127.0.0.1", 0
         cfg.spool_dir = str(tmp_path / "spool")
@@ -1927,28 +1994,103 @@ class TestServiceWithSidecars:
             enabled=True, options={"address": f"127.0.0.1:{redis_srv.port}"}
         )
         cfg.inputs["logstash"] = InputConfig(enabled=True, options={"port": 0})
+        cfg.inputs["tcp"] = InputConfig(enabled=True, options={"port": 0})
+        cfg.inputs["kafka"] = InputConfig(
+            enabled=True,
+            options={"brokers": [f"127.0.0.1:{broker.port}"], "mode": "sidecar"},
+        )
         out = str(tmp_path / "logs_table")
 
         front, queries = build_service(cfg, "parquet", out, once=True, spark=spark)
         try:
-            lj_port = front._sidecars[-1].port
+            assert len(queries) == 4
+            # sidecars start in config order: redis, logstash, kafka, tcp
+            lj_port, tcp_port = front._sidecars[1].port, front._sidecars[3].port
             j = b'{"message":"via-lumberjack"}'
             with _socket.create_connection(("127.0.0.1", lj_port), timeout=5) as c:
                 c.sendall(b"2W" + _s.pack(">I", 1) + b"2J" + _s.pack(">II", 1, len(j)) + j)
                 c.recv(6)  # ack
+            with _socket.create_connection(("127.0.0.1", tcp_port), timeout=5) as c:
+                c.sendall(b'{"message":"via-tcp"}\n')
             deadline = _time.time() + 10
             import glob
 
             while _time.time() < deadline:
-                n = len(glob.glob(os.path.join(cfg.spool_dir, "redis", "*.body"))) + len(
-                    glob.glob(os.path.join(cfg.spool_dir, "lumberjack", "*.body"))
-                )
-                if n >= 2:
+                if len(glob.glob(os.path.join(cfg.spool_dir, "bulk", "*.body"))) >= 4:
                     break
                 _time.sleep(0.05)
             for q in queries:
                 q.awaitTermination(120)
             # second drain picks up files spooled after the first start
+            front2, queries2 = build_service(cfg, "parquet", out, once=True, spark=spark)
+            try:
+                assert len(queries2) == 4
+                for q in queries2:
+                    q.awaitTermination(120)
+            finally:
+                front2.stop()
+        finally:
+            front.stop()
+            redis_srv.close()
+            broker.close()
+        msgs = {r["message"] for r in spark.read.parquet(out).select("message").collect()}
+        assert {"via-redis", "via-lumberjack", "via-tcp", "via-kafka"} <= msgs
+
+    def test_receiver_and_sidecar_share_bulk_spool(self, spark, tmp_path, monkeypatch):
+        """The HTTP receiver and a TCP-lines sidecar spool into ``bulk/``
+        concurrently: one process-wide sequence keeps every name distinct
+        (per-writer counters collide when the clock reads the same
+        nanosecond — pinned here — and os.rename would silently replace a
+        body), no ``.part`` file is left behind, and the bulk stream lands
+        every event exactly once."""
+        import glob
+        import socket as _socket
+        import threading
+        import time as _time
+        import types
+
+        from filebeat_to_clickhouse_spark.__main__ import build_service
+        from filebeat_to_clickhouse_spark.config import InputConfig, PipelineConfig
+        from filebeat_to_clickhouse_spark.streaming import receiver as receiver_mod
+
+        n = 40
+        cfg = PipelineConfig()
+        cfg.server.host, cfg.server.port = "127.0.0.1", 0
+        cfg.spool_dir = str(tmp_path / "spool")
+        cfg.checkpoint_dir = str(tmp_path / "ck")
+        cfg.inputs["tcp"] = InputConfig(enabled=True, options={"port": 0})
+        out = str(tmp_path / "logs_table")
+
+        front, queries = build_service(cfg, "parquet", out, once=True, spark=spark)
+        try:
+            tcp_port = front._sidecars[0].port
+            monkeypatch.setattr(receiver_mod, "time", types.SimpleNamespace(time_ns=lambda: 1))
+
+            def http_writer():
+                for i in range(n):
+                    _post(f"http://127.0.0.1:{front.port}/_bulk",
+                          '{"index":{}}\n{"message":"http-%d"}\n' % i)
+
+            def tcp_writer():
+                for i in range(n):  # one connection per line → one body each
+                    with _socket.create_connection(("127.0.0.1", tcp_port), timeout=5) as c:
+                        c.sendall(b'{"message":"tcp-%d"}\n' % i)
+
+            threads = [threading.Thread(target=f) for f in (http_writer, tcp_writer)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(60)
+            assert not any(t.is_alive() for t in threads)
+            bulk = os.path.join(cfg.spool_dir, "bulk")
+            deadline = _time.time() + 10
+            while len(glob.glob(os.path.join(bulk, "*.body"))) < 2 * n and _time.time() < deadline:
+                _time.sleep(0.05)
+            monkeypatch.undo()
+            assert len(glob.glob(os.path.join(bulk, "*.body"))) == 2 * n
+            assert not [f for f in os.listdir(bulk) if f.endswith(".part")]
+            for q in queries:
+                q.awaitTermination(120)
             front2, queries2 = build_service(cfg, "parquet", out, once=True, spark=spark)
             try:
                 for q in queries2:
@@ -1957,9 +2099,46 @@ class TestServiceWithSidecars:
                 front2.stop()
         finally:
             front.stop()
-            redis_srv.close()
-        msgs = {r["message"] for r in spark.read.parquet(out).select("message").collect()}
-        assert {"via-redis", "via-lumberjack"} <= msgs
+        got = [r["message"] for r in spark.read.parquet(out).select("message").collect()]
+        want = [f"http-{i}" for i in range(n)] + [f"tcp-{i}" for i in range(n)]
+        assert sorted(got) == sorted(want)
+
+
+class TestSpoolBody:
+    def test_threads_sharing_one_clock_tick_never_collide(self, tmp_path, monkeypatch):
+        """Many writers landing bodies in one directory within the same
+        nanosecond (clock pinned) still get distinct names: the sequence is
+        shared by the whole process, so no rename replaces another body."""
+        import sys
+        import threading
+        import types
+
+        from filebeat_to_clickhouse_spark.streaming import receiver as receiver_mod
+
+        monkeypatch.setattr(receiver_mod, "time", types.SimpleNamespace(time_ns=lambda: 1))
+        (tmp_path / "bulk").mkdir()
+        n_threads, per_thread = 16, 50
+
+        def write(t):
+            for i in range(per_thread):
+                receiver_mod.spool_body(str(tmp_path), "bulk", b"%d-%d" % (t, i))
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=write, args=(t,)) for t in range(n_threads)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(30)
+            assert not any(t.is_alive() for t in threads)
+        finally:
+            sys.setswitchinterval(old)
+        files = os.listdir(tmp_path / "bulk")
+        assert len(files) == n_threads * per_thread
+        assert all(f.endswith(".body") for f in files)
+        bodies = {(tmp_path / "bulk" / f).read_bytes() for f in files}
+        assert len(bodies) == n_threads * per_thread
 
 
 class TestTcpLinesSource:
@@ -1980,7 +2159,7 @@ class TestTcpLinesSource:
             deadline = _time.time() + 5
             bodies = []
             while _time.time() < deadline and len(bodies) < 2:
-                bodies = glob.glob(os.path.join(spool, "tcp", "*.body"))
+                bodies = glob.glob(os.path.join(spool, "bulk", "*.body"))
                 _time.sleep(0.05)
         text = "\n".join(open(b).read() for b in sorted(bodies))
         df = spark.createDataFrame([(text,)], "value string")
