@@ -14,7 +14,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 
 from ..checkpointing import default_checkpoint_dir as _default_ckpt_dir
 from ..checkpointing import make_lineage_cut as _make_lineage_cut
@@ -311,8 +311,6 @@ def connected_components(
     labels = und.select(F.col("u").alias("node")).distinct().withColumn("lbl", F.col("node"))
     changed = 0
     for _ in range(max_iter):
-        from pyspark.sql import Observation
-
         nbr_min = (
             und.join(labels.withColumnRenamed("node", "u"), "u")
             .groupBy(F.col("v").alias("node"))
@@ -339,6 +337,8 @@ def connected_components(
             .observe(obs, F.sum(F.col("_chg").cast("long")).alias("n_chg"))
         )
         new_labels = cut(staged, eager=True)
+        # a zero/non-zero convergence signal only: a reliable checkpoint
+        # may recompute the plan, and the observed sum then double-counts
         changed = int(obs.get["n_chg"] or 0)
         labels = new_labels.drop("_chg")
         if changed == 0:
@@ -367,8 +367,6 @@ def _observe_cap_drops(agg: DataFrame, hot_cond, what: str) -> DataFrame:
     try:
         import threading
 
-        from pyspark.sql import Observation
-
         obs = Observation()
         out = agg.observe(
             obs,
@@ -385,7 +383,7 @@ def _observe_cap_drops(agg: DataFrame, hot_cond, what: str) -> DataFrame:
                     logging.getLogger(__name__).info(
                         "%s: frequency cap dropped %d of %d index keys — "
                         "similarity is computed over the rare-key sub-universe "
-                        "(use the _exact_uncapped form for exact semantics)",
+                        "(pass a cap of None for exact semantics)",
                         what,
                         got["n_dropped"],
                         got["n_keys"],
@@ -448,10 +446,10 @@ def ngram_jaccard_pairs(
     out, by design. Documents whose shingles are all hot vanish from the
     output (no rare evidence to weigh).
 
-    ``max_df=None`` restores the uncapped exact form — reachable as
-    ``ngram_jaccard_pairs_exact_uncapped`` — quadratic on adversarial
-    data; prefer ``ngram_jaccard_pairs_prefix`` (high thresholds, skewed
-    df) or minhash_lsh_neardup_pairs (≥10⁷ docs) before reaching for it.
+    ``max_df=None`` restores the uncapped exact form — quadratic on
+    adversarial data; prefer ``ngram_jaccard_pairs_prefix`` (high
+    thresholds, skewed df) or minhash_lsh_neardup_pairs (≥10⁷ docs)
+    before reaching for it.
 
     The shingle table feeds three consumers (both join sides + sizes), so
     it is materialized once instead of re-hashed per consumer; the df cap
@@ -469,20 +467,6 @@ def ngram_jaccard_pairs(
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     return _jaccard_from_inter(pairs, sizes, threshold)
-
-
-def ngram_jaccard_pairs_exact_uncapped(
-    docs: DataFrame, threshold: float = 0.5, shingle_n: int = 3
-) -> DataFrame:
-    """The UNCAPPED exact inverted-index Jaccard join — the legacy form of
-    ``ngram_jaccard_pairs`` before the ``max_df`` guard became the default.
-
-    Exact over the full shingle universe, but candidate volume is Σdf²/2:
-    quadratic in per-shingle document frequency, a measured sf10 growth-
-    check timeout on low-entropy data. Reach for this name only when the
-    corpus is known small or shingle df is known bounded; otherwise use
-    the capped default, the prefix-filtered variant, or MinHash-LSH."""
-    return ngram_jaccard_pairs(docs, threshold=threshold, shingle_n=shingle_n, max_df=None)
 
 
 def _jaccard_from_inter(pairs: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:

@@ -968,31 +968,35 @@ def semdedup_survivors(
     Scale: this is the SemDeDup bargain — clustering first makes the
     quadratic pair step per-CLUSTER, Σ s_c² instead of n². ``k`` must
     grow with the corpus so s_c ≈ n/k stays bounded (the paper runs 11k
-    clusters on 100M+ docs); ``k="auto"`` sizes it as
-    max(8, ⌈n/target_cluster⌉) — one cheap count(), or pass
-    ``corpus_count`` — so Σ s_c² stays ~n·target_cluster, linear in the
-    corpus. The self-join keys on cluster, so a degenerate giant cluster
-    is the skew to watch — balance k, or pre-split oversized clusters,
-    before turning the threshold down. The per-side norm is computed once
-    per row, never per pair.
+    clusters on 100M+ docs). The self-join keys on cluster, so a
+    degenerate giant cluster is the skew to watch — balance k, or
+    pre-split oversized clusters, before turning the threshold down. The
+    per-side norm is computed once per row, never per pair.
 
-    Measured caveat (sf1 rehearsal, SCALE_r04.json): with k ∝ n the pair
-    step is linear but the Lloyd ASSIGNMENT pass is O(n·k) — the argmin
-    folds over all k centroids — so end-to-end grew 6.3× for 10× data.
-    The paper's regime keeps k ≪ n/target (11k clusters for 100M+ docs).
-    ``k="balanced"`` (k = ⌈√n⌉, the DEFAULT since r5) equalizes the two
-    terms at O(n^1.5) — measured 15.4× for 10× data, under its 31.6×
-    bound. ``k="ivf"`` is the rung past that: cells ∝ n (so the pair
-    step stays linear at target_cluster occupancy, like k="auto") but
-    assignment runs through a two-level quantizer with IVF multi-probe
-    routing — ⌈√k⌉ coarse cells × ⌈√k⌉ sub-centroids, per-point cost
-    O(√k·(1 + n_probe)) instead of the flat O(k) fold — and near-
-    identical sub-SEEDS are deduplicated at ``threshold`` before
-    training so a duplicate pair can never anchor two sub-centroids and
-    split apart (hierarchical_cells). Multi-probe closes the remaining
+    Modes of ``k``: an int (fixed cell count), ``"balanced"``, ``"ivf"``
+    or a ``(k1, k2)`` tuple; any other string raises ValueError. The
+    string modes size from one cheap count(), or pass ``corpus_count``.
+    A flat k ∝ n keeps the pair step linear, but the Lloyd ASSIGNMENT
+    pass is O(n·k) — the argmin folds over all k centroids — so
+    end-to-end grew 6.3× for 10× data (sf1 rehearsal, SCALE_r04.json).
+    ``k="balanced"`` (k = ⌈√n⌉, the DEFAULT) equalizes the two terms at
+    O(n^1.5) — measured 15.4× for 10× data, under its 31.6× bound.
+    ``k="ivf"`` is the rung past that: cells ∝ n (k_fine =
+    max(8, ⌈n/target_cluster⌉), so the pair step stays linear at
+    target_cluster occupancy) but assignment runs through a two-level
+    quantizer with IVF multi-probe routing — ⌈√k⌉ coarse cells × ⌈√k⌉
+    sub-centroids, per-point cost O(√k·(1 + n_probe)) instead of the
+    flat O(k) fold — and near-identical sub-SEEDS are deduplicated at
+    ``threshold`` before training so a duplicate pair can never anchor
+    two sub-centroids and split apart (hierarchical_cells). Multi-probe closes the remaining
     split risk at coarse boundaries: the point argmins over the
     sub-centroids of its ``n_probe`` nearest coarse cells, not just its
     own."""
+    if isinstance(k, str) and k not in ("balanced", "ivf"):
+        raise ValueError(
+            f"semdedup_survivors: unknown k mode {k!r}; expected an int, "
+            "'balanced', 'ivf' or a (k1, k2) tuple"
+        )
     n = None
     if isinstance(k, tuple):
         # (k1, k2): two-level hierarchical assignment — k1·k2 effective
@@ -1017,16 +1021,13 @@ def semdedup_survivors(
             dedup_seeds_cos=threshold, n_probe=n_probe, corpus_count=n,
         ).withColumnRenamed("cell", "cluster")
     else:
-        if k in ("auto", "balanced"):
+        if k == "balanced":
             n = corpus_count if corpus_count is not None else corpus.count()
-            if k == "auto":
-                k = max(8, -(-n // target_cluster))
-            else:
-                # k ∝ √n equalizes the O(n·k) assignment pass and the
-                # O(n²/k) pair step at O(n^1.5) — the growth law for corpora
-                # where k="auto" (k ∝ n) makes assignment the bottleneck
-                # (measured 6.3× for 10× data in the sf1 rehearsal)
-                k = max(8, math.isqrt(n))
+            # k ∝ √n equalizes the O(n·k) assignment pass and the O(n²/k)
+            # pair step at O(n^1.5) — the growth law for corpora where a
+            # flat k ∝ n makes assignment the bottleneck (measured 6.3× for
+            # 10× data in the sf1 rehearsal)
+            k = max(8, math.isqrt(n))
         else:
             # explicit integer k: the pair-step regime gate below still
             # wants n — use the caller's count when given (r8 advice: an

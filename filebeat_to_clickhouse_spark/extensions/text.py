@@ -1144,8 +1144,8 @@ def winnow_overlap_pairs(
     growth-check timeout on low-entropy data. A fingerprint shared by
     >``max_postings`` documents is boilerplate, not copy evidence; pairs
     whose overlap is ONLY boilerplate drop out by design.
-    ``max_postings=None`` is the uncapped legacy form, reachable as
-    ``winnow_overlap_pairs_exact_uncapped``.
+    ``max_postings=None`` is the uncapped exact form, quadratic on
+    boilerplate-heavy data.
     """
     fps = _postings_capped_fingerprints(
         docs, k=k, w=w, max_postings=max_postings, text_col=text_col, id_col=id_col
@@ -1172,32 +1172,6 @@ def winnow_overlap_pairs(
             "n_shared",
             (F.col("n_shared") * F.lit(1.0) / F.least("n_a", "n_b")).alias("containment"),
         )
-    )
-
-
-def winnow_overlap_pairs_exact_uncapped(
-    docs: DataFrame,
-    min_shared: int = 5,
-    k: int = 3,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The UNCAPPED winnowing-overlap pair join — the legacy form of
-    ``winnow_overlap_pairs`` before ``max_postings`` became the default
-    guard. Candidate volume is Σ(postings²)/2 per fingerprint: quadratic
-    on boilerplate-heavy or low-entropy corpora, a measured sf10 growth-
-    check timeout. Reach for this name only on corpora known free of hot
-    fingerprints; otherwise the capped default is the same operator with
-    the boilerplate cut."""
-    return winnow_overlap_pairs(
-        docs,
-        min_shared=min_shared,
-        k=k,
-        w=w,
-        max_postings=None,
-        text_col=text_col,
-        id_col=id_col,
     )
 
 

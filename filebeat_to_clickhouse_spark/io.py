@@ -68,6 +68,10 @@ def configure_session(spark: SparkSession) -> SparkSession:
 # in-process.
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
+# load_table's rebalance ramp: one task per this many input rows, up to the
+# session's parallelism (see the width comment in load_table)
+_MIN_TASK_ROWS = 1024
+
 
 def parquet_footprint(path: str) -> tuple[int, int, int] | None:
     """(total_bytes, total_row_groups, total_rows) of a parquet file or
@@ -152,18 +156,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
     the URI scheme, unreadable footers) conservatively keeps the rebalance.
 
     When the rebalance does fire, its width is
-    ``max(min(n_par, ceil(rows / minTaskRows)), ceil(bytes / maxPartitionBytes), 1)``
-    (``spark.graft.rebalance.minTaskRows``, default 1024;
-    ``spark.sql.files.maxPartitionBytes``): one task per ``minTaskRows``
-    input rows up to the session's parallelism, then wider at
-    maxPartitionBytes strides. The byte term keeps the per-task ceiling
-    Spark's own scan splitting enforces, so a giant single-row-group file
-    cannot put an unbounded row count in one task — the bound the
-    fixed-point aggregation kernels (queries._fp_sum_2level) rely on. A
-    width of 1 skips the exchange. Unsizable paths fall back to n_par
-    width — there the _fp_sum_2level int64-partial bound is NOT structural
-    (its docstring carries the caveat). Both confs are runtime-settable and
-    part of the cache key, so flipping either yields a freshly sized frame.
+    ``max(min(n_par, ceil(rows / _MIN_TASK_ROWS)), ceil(bytes / maxPartitionBytes), 1)``
+    (``_MIN_TASK_ROWS`` = 1024; ``spark.sql.files.maxPartitionBytes``):
+    one task per 1024 input rows up to the session's parallelism, then
+    wider at maxPartitionBytes strides. The byte term keeps the per-task
+    ceiling Spark's own scan splitting enforces, so a giant
+    single-row-group file cannot put an unbounded row count in one task —
+    the bound the fixed-point aggregation kernels (queries._fp_sum_2level)
+    rely on. A width of 1 skips the exchange. Unsizable paths fall back to
+    n_par width — there the _fp_sum_2level int64-partial bound is NOT
+    structural (its docstring carries the caveat). maxPartitionBytes is
+    runtime-settable and part of the cache key, so flipping it yields a
+    freshly sized frame.
     """
     from .session import default_parallelism
 
@@ -171,17 +175,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
     # are in place before any plan built here executes.
     configure_session(spark)
     n_par = default_parallelism()
-    # the rebalance-width confs are runtime-toggleable, so they are part of
-    # the plan-cache identity (a stale width would silently survive a flip)
-    try:
-        min_rows = int(spark.conf.get("spark.graft.rebalance.minTaskRows", "1024"))
-    except Exception:  # noqa: BLE001 - unparseable/unavailable conf → default
-        min_rows = 1024
+    # the rebalance-width conf is runtime-toggleable, so it is part of the
+    # plan-cache identity (a stale width would silently survive a flip)
     try:
         mpb = _size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
     except Exception:  # noqa: BLE001 - unparseable/unavailable conf → default
         mpb = 128 * 1024**2
-    key = (sf_dir, name, rebalance, n_par, min_rows, mpb)
+    key = (sf_dir, name, rebalance, n_par, mpb)
     per_session = _TABLE_CACHE.setdefault(spark, {})
     cached = per_session.get(key)
     if cached is not None:
@@ -193,7 +193,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
         fp = parquet_footprint(path)
         if fp is not None:
             # Width is DATA-derived, cores-capped (r10 verdict item 1): ramp
-            # one task per `minTaskRows` of input ROWS until the session's
+            # one task per _MIN_TASK_ROWS of input ROWS until the session's
             # parallelism, then keep growing past it at maxPartitionBytes
             # strides (the same per-task byte ceiling Spark's own scan
             # splitting enforces — the _fp_sum_2level bound stays
@@ -216,8 +216,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
             # the bench contract asks for). Measured NEUTRAL at sf0.1 /
             # 32 cores once the sort-writer conf landed (interleaved sweep
             # 0/64/256/1024: 12.03/11.99/11.38/11.52 s over 11 probes).
-            # minTaskRows=0 restores the r10 flat-n_par behavior.
-            ramp = -(-fp[2] // max(min_rows, 1)) if min_rows > 0 else n_par
+            ramp = -(-fp[2] // _MIN_TASK_ROWS)
             width = max(min(n_par, ramp), -(-fp[0] // max(mpb, 1)), 1)
         # width 1 would be a pure-overhead Exchange SinglePartition on top
         # of an already-single-task scan — skip the exchange outright

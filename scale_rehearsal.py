@@ -32,9 +32,6 @@ SF1 = os.path.join(REPO, ".scratch", "sf1")
 EXTRA = ["ann_ivf_kmeans_topk", "ann_ivf_pq_topk", "bucketed_fact_join_topk",
          "semdedup_survivors", "neardup_quality_survivors",
          "incremental_neardup_sigs", "decontamination_pairs",
-         # embedding_cosine_neardup_auto / semdedup_survivors_balanced:
-         # duplicate-plan aliases de-registered r8 (identical to the
-         # embedding_cosine_neardup / semdedup_survivors defaults above)
          # r4 curation batch
          "chunk_dedup_docs", "duplicated_span_stats", "remove_duplicated_spans",
          "hard_negative_mining", "weighted_token_budget_sample", "c4_rule_flags",
@@ -49,13 +46,8 @@ EXTRA = ["ann_ivf_kmeans_topk", "ann_ivf_pq_topk", "bucketed_fact_join_topk",
          "asof_click_attribution_banded", "session_duration_percentiles",
          "quality_classifier_mixed_scores",
          "neardup_cluster_size_distribution",
-         # r5 additions: the IVF multi-probe SemDeDup rung and the
-         # explicitly-named legacy flat-assignment config. The other
-         # legacy entry (embedding_cosine_neardup_fixedband_legacy) is
-         # deliberately NOT run: it is r4's measured 144 s sf1 quadratic
-         # kept only for bench comparability — re-measuring it would
-         # spend ~7 min re-proving a documented number.
-         "semdedup_survivors_ivf", "semdedup_survivors_auto",
+         # r5 addition: the IVF multi-probe SemDeDup rung
+         "semdedup_survivors_ivf",
          # r5 continuation: data-selection & mixture operators
          "dsir_importance_weights", "incremental_dedup_bloom",
          "ann_filtered_topk", "mixture_token_budgets", "mixture_waterfill",

@@ -44,7 +44,7 @@ class TestLoadTableCacheKey:
 
         from filebeat_to_clickhouse_spark.io import load_table
 
-        rows = 2048  # two minTaskRows (1024) ramp tasks at the default conf
+        rows = 2048  # two _MIN_TASK_ROWS (1024) ramp tasks
         pq.write_table(
             pa.table({"x": pa.array(range(rows), type=pa.int64())}),
             str(tmp_path / "t.parquet"),

@@ -334,7 +334,6 @@ class TestPrefixFilterExactness:
         must return the identical thresholded pair set."""
         from filebeat_to_clickhouse_spark.extensions.dedup import (
             ngram_jaccard_pairs,
-            ngram_jaccard_pairs_exact_uncapped,
             ngram_jaccard_pairs_prefix,
         )
 
@@ -343,7 +342,7 @@ class TestPrefixFilterExactness:
         )
         plain = {
             (r["doc_a"], r["doc_b"]): round(r["jaccard"], 9)
-            for r in ngram_jaccard_pairs_exact_uncapped(df, threshold=0.5).collect()
+            for r in ngram_jaccard_pairs(df, threshold=0.5, max_df=None).collect()
         }
         pref = {
             (r["doc_a"], r["doc_b"]): round(r["jaccard"], 9)
@@ -368,7 +367,7 @@ class TestPrefixFilterExactness:
         import pyspark.sql.functions as F
 
         from filebeat_to_clickhouse_spark.extensions.dedup import (
-            ngram_jaccard_pairs_exact_uncapped,
+            ngram_jaccard_pairs,
             ngram_jaccard_pairs_prefix,
             word_shingles,
         )
@@ -411,7 +410,7 @@ class TestPrefixFilterExactness:
 
         plain = {
             (r["doc_a"], r["doc_b"])
-            for r in ngram_jaccard_pairs_exact_uncapped(df, threshold=t).collect()
+            for r in ngram_jaccard_pairs(df, threshold=t, max_df=None).collect()
         }
         pref = {
             (r["doc_a"], r["doc_b"])
@@ -694,10 +693,7 @@ class TestFrequencyCapGuards:
     by design, while rare-evidence pairs survive untouched."""
 
     def test_jaccard_max_df_semantics(self, spark):
-        from filebeat_to_clickhouse_spark.extensions.dedup import (
-            ngram_jaccard_pairs,
-            ngram_jaccard_pairs_exact_uncapped,
-        )
+        from filebeat_to_clickhouse_spark.extensions.dedup import ngram_jaccard_pairs
 
         boiler = "common one two three four five"
         rows = [(i, boiler) for i in range(4)]  # boilerplate-only docs
@@ -706,7 +702,7 @@ class TestFrequencyCapGuards:
 
         unc = {
             (r["doc_a"], r["doc_b"])
-            for r in ngram_jaccard_pairs_exact_uncapped(df, threshold=0.5).collect()
+            for r in ngram_jaccard_pairs(df, threshold=0.5, max_df=None).collect()
         }
         # uncapped: boilerplate alone makes pairs (all 4 clones at J=1)
         assert {(a, b) for a in range(4) for b in range(a + 1, 4)} <= unc
@@ -722,10 +718,7 @@ class TestFrequencyCapGuards:
         assert set(cap) <= unc
 
     def test_winnow_max_postings_semantics(self, spark):
-        from filebeat_to_clickhouse_spark.extensions.text import (
-            winnow_overlap_pairs,
-            winnow_overlap_pairs_exact_uncapped,
-        )
+        from filebeat_to_clickhouse_spark.extensions.text import winnow_overlap_pairs
 
         boiler = " ".join(f"b{i}" for i in range(30))
         rows = [(i, boiler) for i in range(4)]
@@ -735,7 +728,7 @@ class TestFrequencyCapGuards:
 
         unc = {
             (r["doc_a"], r["doc_b"])
-            for r in winnow_overlap_pairs_exact_uncapped(df, min_shared=5).collect()
+            for r in winnow_overlap_pairs(df, min_shared=5, max_postings=None).collect()
         }
         assert {(a, b) for a in range(4) for b in range(a + 1, 4)} <= unc
         assert (10, 11) in unc

@@ -286,3 +286,22 @@ class TestQ10DeferredDimFKAssumption:
         assert [(r["c_custkey"], r["revenue"]) for r in got] == [
             (r["c_custkey"], float(r["rev_dec"])) for r in old[:19]
         ]
+
+
+class TestRegistryOrderGuard:
+    def test_first_fifty_names_match_correctness_set(self):
+        """The correctness set is the first 50 registered names, in
+        registration order (the keys of CORRECTNESS_r11.json): deleting
+        or reordering an entry at or before position 50 would silently
+        swap which queries that set checks."""
+        import json
+        import os
+
+        from conftest import REPO_ROOT
+
+        from filebeat_to_clickhouse_spark.queries import QUERIES
+
+        with open(os.path.join(REPO_ROOT, "CORRECTNESS_r11.json")) as f:
+            expected = list(json.load(f))
+        assert len(expected) == 50
+        assert list(QUERIES)[:50] == expected

@@ -326,13 +326,11 @@ class TestSemDedup:
         surv = semdedup_survivors(self._corpus(spark), k=8, n_iter=2, threshold=1.1)
         assert surv.count() == 12
 
-    def test_auto_k_matches_fixed_k_at_small_n(self, spark):
+    def test_unknown_k_mode_raises(self, spark):
         from filebeat_to_clickhouse_spark.extensions.similarity import semdedup_survivors
 
-        c = self._corpus(spark)
-        fixed = {tuple(r) for r in semdedup_survivors(c, k=8, n_iter=2, threshold=0.95).collect()}
-        auto = {tuple(r) for r in semdedup_survivors(c, k="auto", n_iter=2, threshold=0.95).collect()}
-        assert fixed == auto
+        with pytest.raises(ValueError, match="'balanced', 'ivf'"):
+            semdedup_survivors(self._corpus(spark), k="auto")
 
 
 class TestHardNegativeMining:

@@ -50,19 +50,6 @@ EXCLUDED = {
         "itself is ~1e9 rows — runtime of the banded path is gated via "
         "simhash_fingerprints instead"
     ),
-    "embedding_cosine_neardup_fixedband_legacy": (
-        "the pre-r5 fixed-band config kept ONLY for bench comparability; "
-        "structurally quadratic candidates (n^2/2^r per band), measured 58x "
-        "for 10x data at sf1 — the flipped default (auto banding) runs here"
-    ),
-    # embedding_cosine_neardup_auto / semdedup_survivors_balanced: the two
-    # duplicate-plan aliases were DE-REGISTERED in r8 (judge directive) —
-    # their EXCLUDED entries are gone because the names no longer exist.
-    "semdedup_survivors_auto": (
-        "legacy k∝n flat-assignment config under its explicit name: O(n·k) = "
-        "O(n^2/256) Lloyd assignment, measured 6.3x for 10x at sf1 — superseded "
-        "by the balanced default and the ivf rung, both measured here"
-    ),
     "semdedup_survivors_hier": (
         "pinned k=(4,4) is the sf0.01 ORACLE instantiation; at 200k vectors "
         "12.5k-vector cells give ~1e9 in-cell pairs (caught live in the r4 run). "
@@ -81,12 +68,6 @@ EXCLUDED = {
         "candidate volume sum(df^2)/2, the measured r5 sf10 timeout (>240 s) "
         "kept only under this legacy name for small/df-bounded corpora; the "
         "df-capped default ngram_jaccard_pairs runs here (5.6 s at sf10)"
-    ),
-    "winnow_overlap_pairs_exact_uncapped": (
-        "the r6 EXPLICIT DEMOTION of the uncapped winnowing pair join: "
-        "sum(postings^2)/2 candidates, the measured r5 sf10 timeout — kept "
-        "only under this legacy name; the capped default winnow_overlap_pairs "
-        "runs here (21.3 s at sf10)"
     ),
 }
 
